@@ -922,8 +922,8 @@ def decontam_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters = connected components over the n-gram
     Jaccard near-dup graph (seatunnel_spark/dataops/dedup.py:
-    duplicate_clusters — min-label propagation, one shuffle join per
-    round). cluster_id = min doc_id of the component."""
+    duplicate_clusters — graph.py's pointer-jumping connected
+    components). cluster_id = min doc_id of the component."""
     from seatunnel_spark.dataops import duplicate_clusters, ngram_jaccard_pairs
 
     pairs = ngram_jaccard_pairs(

@@ -603,76 +603,33 @@ def duplicate_clusters(
     canonical "keep one document per duplicate cluster" step that
     follows any pairwise dedup (MinHash/SimHash/embedding pairs).
 
-    Min-label propagation: every vertex starts labeled with itself;
-    each round takes the min label over its neighbors; converges in
-    O(component diameter) rounds. Duplicate clusters are shallow
-    (near-cliques), so 2-3 rounds is typical. Each round is ONE
-    shuffle join + ONE map-side-combined min aggregation — no driver
-    graph, no collected edges, so it scales to billions of pairs.
-    The STATIC edge list persists as a compressed columnar cache
-    (resilient: an evicted block recomputes — the graph.py lesson);
-    the per-round LABELS localCheckpoint, because there the point is
-    truncating the iterative lineage that would otherwise make
-    Catalyst re-analyze an ever-deeper plan at 100 TB, and the
-    (id, label) frame is the smallest thing in the job.
+    Runs graph.py's connected-components round loop (hash-to-min with
+    pointer jumping, O(log diameter) rounds) over the symmetrized pair
+    list — no driver graph, no collected edges, so it scales to
+    billions of pairs. The pair list persists as a compressed columnar
+    cache and is released before returning; the per-round labels are
+    localCheckpoint-ed, which bounds the iterative lineage.
 
     Returns (id, cluster_id) for every vertex that appears in `pairs`;
     cluster_id is the component's minimum id (deterministic canon).
-
-    Round shape (round 12, the graph.py loop discipline): the
-    convergence probe rides the round's own checkpoint as an observed
-    metric instead of a separate count() job (measured 111 vs 178
-    ms/round even on a 50-row frame — the observe callback costs less
-    than the count job it replaces at every size). Deliberately NOT
-    broadcast-hinted like graph.py's loops: there the edge side is
-    orders of magnitude bigger than the |V|-row state (|E| ≫ |V|),
-    so pinning the state as build side saves a per-round edge-side
-    hash-relation rebuild; here |edges| = 2·|pairs| and |labels| =
-    |touched vertices| are the SAME order, the planner's own choice
-    is already fine at both scales, and a paired A/B of hinted rounds
-    measured +0.8 s on dedup_keep_best (two forced broadcast builds
-    per round on tiny cluster graphs).
+    Raises RuntimeError if labels are still changing after `max_iter`
+    rounds, rather than return a partial clustering.
     """
-    from seatunnel_spark.dataops.graph import _checkpoint_observed
+    from seatunnel_spark.dataops.graph import _cc_labels, _symmetrized
 
-    edges = scoped_persist(pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).union(
-        pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    ))
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src").agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.src, "left")
-            .select(
-                labels.id,
-                F.least(
-                    labels.label, F.coalesce("nbr_label", labels.label)
-                ).alias("label"),
-                (F.coalesce("nbr_label", labels.label) < labels.label)
-                .alias("__chg"),
-            )
-        )
-        new_labels, changed = _checkpoint_observed(
-            new_labels, F.sum(F.col("__chg").cast("long")))
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    # labels is localCheckpoint-materialized (every round), so the
-    # result no longer reads the edge cache — release it here instead
-    # of leaving it registered in the CacheManager until session end
-    # (persist()ed plans, unlike checkpoint RDDs, are NOT collected by
-    # the ContextCleaner; long-lived sessions would accumulate them)
-    edges.unpersist()
-    return labels.select("id", F.col("label").alias("cluster_id"))
+    und = scoped_persist(_symmetrized(pairs, id_a, id_b, dedupe=False))
+    try:
+        # hint=False: unlike graph.py's loops (|E| >> |V|), here
+        # |edges| = 2·|pairs| and the labels are the same order, the
+        # planner's own join choice is fine at both scales, and a
+        # paired A/B of broadcast-hinted rounds measured +0.8 s on
+        # dedup_keep_best (two forced broadcast builds per round on
+        # tiny cluster graphs).
+        labels = _cc_labels(und, max_iter, False, "duplicate_clusters")
+    finally:
+        und.unpersist()
+    return labels.select(F.col("node").alias("id"),
+                         F.col("component").alias("cluster_id"))
 
 
 def jaccard_dup_clusters(
@@ -766,8 +723,8 @@ def best_of_cluster(
     -> (cluster_id, n_members, id, <fields...>) with the winner's
     values; unmatched records pass through as 1-member clusters.
 
-    Scale: pairs -> duplicate_clusters (tiny components, 2-3 label
-    rounds), then ONE map-side-combined max_by aggregation per field
+    Scale: pairs -> duplicate_clusters (tiny components, a few
+    pointer-jumping CC rounds), then ONE map-side-combined max_by aggregation per field
     over |records| rows keyed by cluster — no window, no per-cluster
     sort (the golden_records shape). The pick key packs
     (round(score, 4), -id) into a single BIGINT —

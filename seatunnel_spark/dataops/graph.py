@@ -54,15 +54,12 @@ def _bcast_if_small(df: DataFrame, nrows: int) -> DataFrame:
 def _checkpoint_observed(df: DataFrame, metric) -> tuple[DataFrame, int]:
     """localCheckpoint `df` and return (checkpointed frame, metric),
     with `metric` (an aggregate Column) computed BY THE CHECKPOINT JOB
-    itself via DataFrame.observe — the round-12 form of the iterative
-    loops' convergence probe (guide §1.5/§5). The former shape paid a
-    separate count() job per round on top of each checkpoint job; at
-    sf0.1 every extra job costs a 0.1-0.3 s scheduler/stage floor
-    (quantified round 11, OPTIMIZATION_r11.md §9) and the loops run
-    5-11 rounds, so the probe jobs were a real fraction of every
-    graph query. Observed metrics are accumulator-backed and exact —
-    identical to the count they replace. Returns 0 when the observed
-    aggregate is NULL (empty frame)."""
+    itself via DataFrame.observe — the iterative loops' convergence
+    probe costs no job of its own. At sf0.1 every extra job costs a
+    0.1-0.3 s scheduler/stage floor (OPTIMIZATION_r11.md §9) and the
+    loops run 5-11 rounds. Observed metrics are accumulator-backed
+    and exact. Returns 0 when the observed aggregate is NULL (empty
+    frame)."""
     obs = Observation()
     out = df.observe(obs, metric.alias("__m")).localCheckpoint()
     return out, int(obs.get["__m"] or 0)
@@ -313,14 +310,16 @@ def connected_components(
     needs O(diameter) rounds — a chain-shaped 100 TB web graph would
     run hundreds of shuffles; the shortcut step doubles the hop length
     covered per round, giving O(log d) convergence (tested on a long
-    path graph). Each round is two |V|-row-key shuffles plus one
-    neighbor-min aggregation; the EDGE list is shuffled once up front
-    (the distinct) and then only ever probed on its persisted
-    partitioning. Convergence is a changed-label flag computed INSIDE
-    the round's projection (the pre-round label rides along as a
-    column) probed by one short-circuiting limit(1) action — no
-    extra new-vs-old join per round; `max_iter` is a backstop, not a
-    tuning knob.
+    path graph). The initial labeling already takes one propagation
+    step inside the node-set aggregation. Each round is two
+    |V|-row-key shuffles plus one neighbor-min aggregation; the EDGE
+    list is shuffled once up front (the distinct) and then only ever
+    probed on its persisted partitioning. Convergence is a
+    changed-label count computed INSIDE the round's projection (the
+    pre-round label rides along as a column) — no extra new-vs-old
+    join per round. The loop runs until a round changes no label; if
+    labels still change after `max_iter` rounds it raises
+    RuntimeError rather than return a partial labeling.
 
     Lineage discipline: the per-round label table is localCheckpoint-ed
     (eager). The pointer-jump SELF-join doubles the logical plan every
@@ -332,42 +331,64 @@ def connected_components(
     a real cluster swap in df.checkpoint() to reliable storage for the
     same truncation with durability.
 
-    Round shape (round 12): ONE checkpoint job per round. The
+    Round shape: ONE checkpoint job per round. The
     propagated table is persist-ed, not checkpointed — both sides of
     the pointer-jump self-join read the cache inside the round's
     single checkpoint job (block-level locking computes each cached
     partition once), its lineage is bounded by the previous round's
     checkpointed labels, and the cache is released as soon as the
     round materializes. The convergence probe is an observed metric
-    on the same job (see _checkpoint_observed). The former shape paid
-    3 jobs per round (prop checkpoint, new checkpoint, changed-probe
-    count) for the identical arithmetic.
+    on the same job (see _checkpoint_observed). The round loop itself
+    is `_cc_labels`, shared with connected_components_on_bucketed and
+    dedup.duplicate_clusters.
     """
     und = scoped_persist(_symmetrized(edges, src, dst, dedupe))
+    try:
+        return _cc_labels(und, max_iter, True, "connected_components")
+    finally:
+        und.unpersist()
+
+
+def _cc_labels(und: DataFrame, max_iter: int, hint: bool,
+               op: str) -> DataFrame:
+    """The one connected-components round loop over a symmetrized
+    (__src, __dst) edge frame -> (node, component); see
+    connected_components. `hint` broadcast-hints the |V|-row sides
+    (see _BCAST_ROWS); `op` names the caller in the RuntimeError
+    raised when labels still change after `max_iter` rounds."""
+    # the initial labeling already takes one propagation step,
+    # component = min(node, min neighbor id), folded into the
+    # node-set aggregation (the same shuffle a distinct pays)
     labels, nv = _checkpoint_observed(
-        und.select(F.col("__src").alias("node")).distinct()
-        .withColumn("component", F.col("node")),
+        und.groupBy("__src")
+        .agg(F.least(F.col("__src"), F.min("__dst")).alias("component"))
+        .withColumnRenamed("__src", "node"),
         F.count(F.lit(1)))
+    # |labels| = |V| is KNOWN (observed at init): with `hint`, the
+    # |V|-row sides are broadcast while small so the planner never
+    # rebuilds an edge-side hash relation per round nor
+    # sort-merge-shuffles against the stats-less RDD-scan label table
+    # (see _BCAST_ROWS). A negative count passes through unhinted.
+    nb = nv if hint else -1
+    # every label is unconfirmed until a round changes none
+    changed = nv
     for _ in range(max_iter):
-        # |labels| = |V| is KNOWN (observed at init) — hint the
-        # |V|-row sides broadcast while small so the planner never
-        # rebuilds an edge-side hash relation per round nor
-        # sort-merge-shuffles against the stats-less RDD-scan label
-        # table (see _BCAST_ROWS). min/compare semantics — join
-        # strategy cannot change any value.
+        if changed == 0:
+            break
+        # min/compare semantics — join strategy cannot change any value
         nbr_min = (
             und.join(_bcast_if_small(
                 labels.select(F.col("node").alias("__src"),
-                              F.col("component").alias("__l")), nv),
+                              F.col("component").alias("__l")), nb),
                      "__src")
             .groupBy(F.col("__dst").alias("node"))
             .agg(F.min("__l").alias("__nl"))
         )
         # the pre-round component rides along as __old so convergence
         # is a column compare on the round's own output — no extra
-        # new-vs-labels join per round (duplicate_clusters pattern)
+        # new-vs-labels join per round
         prop = (
-            labels.join(_bcast_if_small(nbr_min, nv), "node", "left")
+            labels.join(_bcast_if_small(nbr_min, nb), "node", "left")
             .select("node",
                     F.least(F.col("component"),
                             F.coalesce(F.col("__nl"), F.col("component"))
@@ -375,26 +396,29 @@ def connected_components(
                     F.col("component").alias("__old"))
             .persist()
         )
-        # pointer jump: component <- component(component). Every label
-        # is a node id, so the map is a |V|-row self-join.
-        ptr = prop.select(F.col("node").alias("__t"),
-                          F.col("component").alias("__jc"))
-        new = (
-            prop.join(_bcast_if_small(ptr, nv),
-                      prop["component"] == ptr["__t"], "left")
-            .select(prop["node"],
-                    F.coalesce(ptr["__jc"], prop["component"])
-                    .alias("component"),
-                    (F.coalesce(ptr["__jc"], prop["component"])
-                     != prop["__old"]).alias("__chg"))
-        )
-        new, changed = _checkpoint_observed(
-            new, F.sum(F.col("__chg").cast("long")))
-        prop.unpersist()
+        try:
+            # pointer jump: component <- component(component). Every
+            # label is a node id, so the map is a |V|-row self-join.
+            ptr = prop.select(F.col("node").alias("__t"),
+                              F.col("component").alias("__jc"))
+            new = (
+                prop.join(_bcast_if_small(ptr, nb),
+                          prop["component"] == ptr["__t"], "left")
+                .select(prop["node"],
+                        F.coalesce(ptr["__jc"], prop["component"])
+                        .alias("component"),
+                        (F.coalesce(ptr["__jc"], prop["component"])
+                         != prop["__old"]).alias("__chg"))
+            )
+            new, changed = _checkpoint_observed(
+                new, F.sum(F.col("__chg").cast("long")))
+        finally:
+            prop.unpersist()
         labels = new.drop("__chg")
-        if changed == 0:
-            break
-    und.unpersist()
+    if changed:
+        raise RuntimeError(
+            f"{op} did not converge within max_iter={max_iter} rounds: "
+            f"{changed} labels still changed in the last round")
     return labels
 
 
@@ -509,26 +533,27 @@ def k_core(
     a style choice: a self-referencing degree table grows the logical
     plan exponentially in rounds (measured: an 11-round peel exceeded
     the 2 GB plan-string limit). Convergence is one bounded count per
-    round; `max_iter` is a backstop — rounds are worst-case O(|V|) on
-    a path graph but single digits on real graphs (11 at sf0.01 for
-    the co-purchase graph)."""
+    round. Rounds are worst-case O(|V|) on a path graph but single
+    digits on real graphs (11 at sf0.01 for the co-purchase graph);
+    if vertices are still pending a drop after `max_iter` rounds the
+    peel raises RuntimeError rather than return a partial core."""
     und = scoped_persist(_symmetrized(edges, src, dst, dedupe))
-    return _kcore_peel(und, k, max_iter)
+    return _kcore_peel(und, k, max_iter, "k_core")
 
 
-def _kcore_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
+def _kcore_peel(und: DataFrame, k: int, max_iter: int,
+                op: str) -> DataFrame:
     """Shared delta-peel core over a symmetrized (__src, __dst) edge
     frame -> (node, degree) for the k-core; see k_core's docstring.
+    `op` names the caller in the non-convergence error.
 
-    Round shape (round 12): ONE checkpoint job per round. The dropped
+    Round shape: ONE checkpoint job per round. The dropped
     frontier is a FILTER over the checkpointed degree table (a cheap
     scan of local blocks — no separate checkpoint job), and the
     round's drop count is an observed metric on the NEXT degree
     checkpoint (each round observes how many vertices the FOLLOWING
     round will peel, so the convergence probe costs no job at all —
-    see _checkpoint_observed). The former shape paid 3 jobs per round
-    (dropped checkpoint, dropped count, degs checkpoint) for the
-    identical peel arithmetic."""
+    see _checkpoint_observed)."""
     degs, ndrop = _checkpoint_observed(
         und.groupBy("__src").agg(F.count(F.lit(1)).alias("__deg")),
         F.sum((F.col("__deg") < k).cast("long")))
@@ -557,6 +582,10 @@ def _kcore_peel(und: DataFrame, k: int, max_iter: int) -> DataFrame:
                      - F.coalesce(F.col("__dec"), F.lit(0)))
                     .alias("__deg")),
             F.sum((F.col("__deg") < k).cast("long")))
+    if ndrop:
+        raise RuntimeError(
+            f"{op} did not converge within max_iter={max_iter} rounds: "
+            f"{ndrop} vertices still pending a drop")
     # und stays persisted — callers may compose further reads (same
     # clearCache contract for long-lived sessions as pagerank's edges).
     return degs.select(F.col("__src").alias("node"),
@@ -576,7 +605,8 @@ def k_core_on_bucketed(
     ZERO edge-side exchange (plan-tested) — only the frontier moves
     (and AQE broadcasts it once it shrinks). Feed it a SYMMETRIZED
     edge list, the connected_components_on_bucketed convention."""
-    return _kcore_peel(spark.table(table), k, max_iter)
+    return _kcore_peel(spark.table(table), k, max_iter,
+                       "k_core_on_bucketed")
 
 
 def degree_distribution(edges: DataFrame, src: str = "src",
@@ -612,57 +642,14 @@ def connected_components_on_bucketed(
 
     Feed it a SYMMETRIZED edge list (write both orientations before
     write_bucketed_edges) — bucketed storage fixes one physical
-    partitioning, and symmetrizing at read time would break it."""
-    und = spark.table(table)
-    # one initial checkpoint, not two (the withColumn is free to fold
-    # into the distinct's job); round shape = connected_components:
-    # ONE observed checkpoint job per round, prop persisted
-    # intra-round, |V|-row sides broadcast-hinted off the measured
-    # count while small (see _BCAST_ROWS). NOTE the neighbor-min join
-    # keeps the bucketed scan exchange-free either way — the hint
-    # only spares the per-round sort of the stats-less label side.
-    labels, nv = _checkpoint_observed(
-        und.select(F.col("__src").alias("node")).distinct()
-        .withColumn("component", F.col("node")),
-        F.count(F.lit(1)))
-    for _ in range(max_iter):
-        nbr_min = (
-            und.join(_bcast_if_small(
-                labels.select(F.col("node").alias("__src"),
-                              F.col("component").alias("__l")), nv),
-                     "__src")
-            .groupBy(F.col("__dst").alias("node"))
-            .agg(F.min("__l").alias("__nl"))
-        )
-        # convergence folded into the round's output (see
-        # connected_components): __old rides along, no extra join
-        prop = (
-            labels.join(_bcast_if_small(nbr_min, nv), "node", "left")
-            .select("node",
-                    F.least(F.col("component"),
-                            F.coalesce(F.col("__nl"), F.col("component"))
-                            ).alias("component"),
-                    F.col("component").alias("__old"))
-            .persist()
-        )
-        ptr = prop.select(F.col("node").alias("__t"),
-                          F.col("component").alias("__jc"))
-        new = (
-            prop.join(_bcast_if_small(ptr, nv),
-                      prop["component"] == ptr["__t"], "left")
-            .select(prop["node"],
-                    F.coalesce(ptr["__jc"], prop["component"])
-                    .alias("component"),
-                    (F.coalesce(ptr["__jc"], prop["component"])
-                     != prop["__old"]).alias("__chg"))
-        )
-        new, changed = _checkpoint_observed(
-            new, F.sum(F.col("__chg").cast("long")))
-        prop.unpersist()
-        labels = new.drop("__chg")
-        if changed == 0:
-            break
-    return labels
+    partitioning, and symmetrizing at read time would break it.
+    Same round loop as connected_components, so running out of
+    `max_iter` rounds raises the same way."""
+    # the neighbor-min join keeps the bucketed scan exchange-free
+    # either way; the hint only spares the per-round sort of the
+    # stats-less label side
+    return _cc_labels(spark.table(table), max_iter, True,
+                      "connected_components_on_bucketed")
 
 
 def personalized_pagerank(
@@ -729,6 +716,44 @@ def personalized_pagerank(
     return ranks
 
 
+def _hits_half_step(e: DataFrame, scores: DataFrame, frm: str,
+                    to: str, col: str, out: str,
+                    round_to: int) -> DataFrame:
+    """One HITS half-step over the persisted edges: `out`(v) = the sum
+    of `col` over the edges whose `frm` end scores it and whose `to`
+    end is v, L1-normalized and rounded, localCheckpoint-ed.
+
+    The raw neighbor sums feed BOTH the normalization denominator
+    (the broadcast 1-row agg) and the normalized projection —
+    persist, don't checkpoint: the broadcast subquery populates the
+    cache and the projection reads it inside the SAME checkpoint job,
+    so each half-step is ONE job instead of two. Lineage stays
+    bounded: the output is checkpointed, and the raw sums' own
+    lineage reaches only the persisted edges and the previous
+    (checkpointed) half-step.
+
+    SPARSE: scores ride only the nodes the neighbor sum produced;
+    absent nodes carry exactly 0.0, and a +0.0 term never changes an
+    IEEE sum of non-negative scores, so hits fills the dense node set
+    ONCE at the end with bit-identical results."""
+    raw = (e.join(scores.withColumnRenamed("node", frm), frm)
+           .groupBy(F.col(to).alias("node"))
+           .agg(F.sum(col).alias("__r"))
+           .persist())
+    try:
+        s = F.broadcast(raw.agg(F.sum("__r").alias("__s")))
+        return (raw.join(s)
+                .select("node",
+                        F.when(F.col("__s") > 0,
+                               F.round(F.col("__r") / F.col("__s"),
+                                       round_to))
+                        .otherwise(F.lit(0.0))
+                        .alias(out))
+                .localCheckpoint())
+    finally:
+        raw.unpersist()
+
+
 def hits(
     edges: DataFrame,
     src: str = "src",
@@ -782,51 +807,10 @@ def hits(
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
     auth = None
     for _ in range(iters):
-        # the raw neighbor sums feed BOTH the normalization
-        # denominator (the broadcast 1-row agg) and the normalized
-        # projection — persist, don't checkpoint (round 12): the
-        # broadcast subquery populates the cache and the projection
-        # reads it inside the SAME half-step checkpoint job, so each
-        # half-step is ONE job instead of two. Lineage stays bounded:
-        # the half-step OUTPUT is still checkpointed every time, and
-        # a_raw/h_raw's own lineage reaches only the persisted edges
-        # and the previous (checkpointed) half-step.
-        a_raw = (e.join(hub.withColumnRenamed("node", "__src"),
-                        "__src")
-                 .groupBy(F.col("__dst").alias("node"))
-                 .agg(F.sum("hub").alias("__a"))
-                 .persist())
-        s_a = F.broadcast(a_raw.agg(F.sum("__a").alias("__s")))
-        # SPARSE half-steps (round-11): scores ride only the nodes the
-        # neighbor sum produced; absent nodes carry exactly 0.0 and a
-        # +0.0 term never changes an IEEE sum of non-negative scores,
-        # so every aggregate below is bit-identical to the former
-        # dense (nodes-joined) form — the dense fill happens ONCE at
-        # the end instead of twice per iteration.
-        auth = (a_raw.join(s_a)
-                .select("node",
-                        F.when(F.col("__s") > 0,
-                               F.round(F.col("__a")
-                                       / F.col("__s"), round_to))
-                        .otherwise(F.lit(0.0))
-                        .alias("auth"))
-                .localCheckpoint())
-        a_raw.unpersist()
-        h_raw = (e.join(auth.withColumnRenamed("node", "__dst"),
-                        "__dst")
-                 .groupBy(F.col("__src").alias("node"))
-                 .agg(F.sum("auth").alias("__h"))
-                 .persist())
-        s_h = F.broadcast(h_raw.agg(F.sum("__h").alias("__s")))
-        hub = (h_raw.join(s_h)
-               .select("node",
-                       F.when(F.col("__s") > 0,
-                              F.round(F.col("__h")
-                                      / F.col("__s"), round_to))
-                       .otherwise(F.lit(0.0))
-                       .alias("hub"))
-               .localCheckpoint())
-        h_raw.unpersist()
+        auth = _hits_half_step(e, hub, "__src", "__dst", "hub", "auth",
+                               round_to)
+        hub = _hits_half_step(e, auth, "__dst", "__src", "auth", "hub",
+                              round_to)
     return (nodes.join(hub, "node", "left").join(auth, "node", "left")
             .select("node",
                     F.coalesce("hub", F.lit(0.0)).alias("hub"),
@@ -869,14 +853,12 @@ def bfs_hops(
     if dedupe:
         e = e.distinct()
     e = scoped_persist(e)
-    # Round shape (round 12): ONE checkpoint job per hop. The new
+    # Round shape: ONE checkpoint job per hop. The new
     # layer is computed INSIDE the round's visited checkpoint (its
     # row count observed by the same job — see _checkpoint_observed),
     # and the next frontier is a FILTER of that checkpointed visited
     # set (a scan of local blocks, no dedicated frontier checkpoint).
-    # The former shape paid 3 jobs per hop (nxt checkpoint, nxt
-    # count, visited checkpoint) for the identical layers. The
-    # visited set stays ONE consolidated checkpoint — the layered
+    # The visited set stays ONE consolidated checkpoint — the layered
     # alternative (anti-join against a union of per-round caches) was
     # measured +30% at sf10 in round 11 and stays rejected.
     visited, n_visited = _checkpoint_observed(

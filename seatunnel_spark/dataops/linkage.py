@@ -388,7 +388,7 @@ def golden_records(
     unmatched records pass through as 1-member clusters.
 
     Scale: the pair graph is near-duplicate-shaped (tiny components),
-    so the CC converges in 2-3 label rounds; survivorship is ONE
+    so the CC converges in a few rounds; survivorship is ONE
     map-side-combined max_by aggregation per field over |records|
     rows keyed by cluster — no window, no per-cluster sort. The
     (order_col, id) struct key makes every pick deterministic even

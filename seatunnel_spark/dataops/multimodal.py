@@ -39,15 +39,6 @@ AUDIO_META = T.StructType(
 )
 
 
-def read_binary_dir(spark, path: str, glob: str | None = None) -> DataFrame:
-    """Load files as (path, modificationTime, length, content) via the
-    native binaryFile source (reference Binary read strategy analog)."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
 def _pil_available() -> bool:
     try:
         import PIL.Image  # noqa: F401

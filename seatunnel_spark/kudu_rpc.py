@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import socket
 import struct
-import uuid
 from datetime import date, datetime, timezone
 
 from seatunnel_spark import pb
@@ -566,10 +565,6 @@ class KuduClient:
             return errors
         finally:
             conn.close()
-
-
-def new_scanner_id() -> bytes:
-    return uuid.uuid4().bytes
 
 
 __all__ = [

@@ -102,21 +102,6 @@ def _fetch_one(url: str, method: str, headers: dict | None, params: dict | None,
         return resp.read().decode()
 
 
-def _fetch_pages(url: str, method: str, headers: dict, params: dict,
-                 body, page_spec: dict | None) -> list[str]:
-    """Legacy batch fetcher kept as the `_fetcher` injection signature:
-    returns one raw text per page (tests inject fakes here)."""
-    if not page_spec:
-        return [_fetch_one(url, method, headers, params, body)]
-    total = int(page_spec.get("total_page_size", 1))
-    field = page_spec.get("page_field", "page")
-    out = []
-    for page in range(1, total + 1):
-        out.append(_fetch_one(url, method, headers,
-                              {**(params or {}), field: page}, body))
-    return out
-
-
 class PrometheusSource(Source):
     """Prometheus HTTP-API source (connector-prometheus
     PrometheusSourceParameter: query_type Instant -> GET /api/v1/query,

@@ -215,32 +215,3 @@ class JdbcSource(Source):
             rdd, ", ".join(f"`{c}` string" for c in cols))
         return raw.select(*[F.col(f"`{c}`").cast(t).alias(c)
                             for c, t in zip(cols, spark_types)])
-
-
-def dynamic_chunk_predicates(
-    spark: SparkSession, url: str, table: str, column: str, props: dict, chunk_rows: int
-) -> list[str]:
-    """DynamicChunkSplitter analog: probe min/max/count, emit balanced
-    range predicates for `read.jdbc(predicates=...)`.
-
-    Reference behavior: connector-cdc-base/.../AbstractJdbcSourceChunkSplitter.java
-    (split.size rows per chunk). Probing runs 3 scalar queries driver-side.
-    """
-    probe = spark.read.jdbc(
-        url=url,
-        table=f"(SELECT MIN({column}) lo, MAX({column}) hi, COUNT(*) n FROM {table}) p",
-        properties=props,
-    ).collect()[0]
-    lo, hi, n = probe["lo"], probe["hi"], probe["n"]
-    if n == 0 or lo is None:
-        return ["1=1"]
-    chunks = max(1, int(n) // max(chunk_rows, 1))
-    step = max((int(hi) - int(lo)) // chunks, 1)
-    preds, cur = [], int(lo)
-    while cur < int(hi):
-        nxt = cur + step
-        preds.append(f"{column} >= {cur} AND {column} < {nxt}")
-        cur = nxt
-    preds.append(f"{column} >= {int(hi)}")  # inclusive tail chunk
-    preds.append(f"{column} IS NULL")
-    return preds

@@ -305,6 +305,17 @@ def test_duplicate_clusters_chain_and_islands(spark):
     got = {r.id: r.cluster_id for r in duplicate_clusters(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
                    10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    # a 61-node chain (diameter 60) is ONE cluster within the default
+    # max_iter=20: plain min-propagation would need 60 rounds
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "id_a int, id_b int")
+    got = {r.id: r.cluster_id for r in duplicate_clusters(chain).collect()}
+    assert len(got) == 61 and set(got.values()) == {0}
+    # too few rounds: raise, never a partial clustering that splits
+    # one component into several
+    with pytest.raises(RuntimeError,
+                       match=r"duplicate_clusters .*max_iter=2\b"):
+        duplicate_clusters(chain, max_iter=2)
 
 
 def test_minhash_hot_bucket_cap(spark):
@@ -2768,6 +2779,10 @@ def test_connected_components_log_convergence_on_path(spark):
     got = {r["node"]: r["component"]
            for r in connected_components(path, max_iter=8).collect()}
     assert len(got) == 32 and set(got.values()) == {0}
+    # too few rounds to converge: raise, not a partial labeling
+    with pytest.raises(RuntimeError,
+                       match=r"connected_components .*max_iter=2\b"):
+        connected_components(path, max_iter=2)
 
 
 def test_checkpoint_observed_metric_and_truncation(spark):
@@ -2860,6 +2875,13 @@ def test_k_core_peel_cascade(spark):
     core = sorted((r["node"], r["degree"])
                   for r in k_core(df, 2).collect())
     assert core == [(20, 2), (21, 2), (22, 2)]
+    # a 61-node path peels from both ends, two vertices per round: the
+    # middle vertex is still pending after 30 rounds, gone in round 31
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match=r"k_core .*max_iter=30\b"):
+        k_core(path, 2)
+    assert k_core(path, 2, max_iter=31).count() == 0
 
 
 def test_canonical_url_rules(spark):
